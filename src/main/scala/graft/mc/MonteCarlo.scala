@@ -5,6 +5,22 @@ import org.apache.spark.sql.functions._
 
 import graft.util.Tables.{dmean, dsum, dvarSamp}
 
+/** One NMAR replicate. The draws are exact-size: A is SRS(n_A) and B an
+  * exact-n_B weighted draw, so both must fit in the population — checked
+  * here, on the driver, when [[MonteCarlo.nmarGrid]] builds the grid. */
+final case class SimConfig(sim: Int, gamma: Double, seedBase: Long,
+                           nPop: Int, nA: Int, nB: Int) {
+  require(nA >= 1 && nA <= nPop && nB >= 1 && nB <= nPop,
+    s"SimConfig(sim=$sim, gamma=$gamma): need 1 <= nA <= nPop and " +
+      s"1 <= nB <= nPop, got nA=$nA, nB=$nB, nPop=$nPop")
+}
+
+final case class SimResult(sim: Int, gamma: Double, estimator: String,
+                           estimate: Double)
+
+final case class SimResultV2(sim: Int, gamma: Double, estimator: String,
+                             sd: Double, estimate: Double)
+
 /** Monte-Carlo simulation harness (reference `ipynb` cell 23/37:
   * `parLapply(cl, 1:n_sim, run_simulation)` over a γ grid).
   *
@@ -18,16 +34,12 @@ import graft.util.Tables.{dmean, dsum, dvarSamp}
   * shuffle; only the tiny result rows move. For populations too large for
   * one task (N ≳ 10M) the same estimators run distributed per-sim via
   * graft.estimators on a DataFrame population instead.
+  *
+  * Per-replicate cost is the task-local kernel's, so [[LocalSim]] keeps
+  * its per-row paths primitive: no tuples and no generic
+  * `Array.fill`/`tabulate`/`map` (they box every element) — see its
+  * scaladoc.
   */
-final case class SimConfig(sim: Int, gamma: Double, seedBase: Long,
-                           nPop: Int, nA: Int, nB: Int)
-
-final case class SimResult(sim: Int, gamma: Double, estimator: String,
-                           estimate: Double)
-
-final case class SimResultV2(sim: Int, gamma: Double, estimator: String,
-                             sd: Double, estimate: Double)
-
 object MonteCarlo {
 
   /** NMAR grid: replicates × gamma values (ipynb:1791-1794).

@@ -88,10 +88,18 @@ object StatsQueries {
     * are the prefix sums' final values, already on the driver for
     * free, so callers needing totals skip a whole aggregation pass.
     * Internally byV is lease-pinned so the documents scan underneath
-    * runs once across the bucket-totals and windowed passes. */
-  private def withCumSums(byV: DataFrame): (DataFrame, (Long, Long)) = {
+    * runs once across the bucket-totals and windowed passes.
+    *
+    * Precondition: `v` is an integral column (byte/short/int/long),
+    * enforced on entry. The bucket bound above holds only for integers:
+    * a fractional v puts every value with |v| < 2^16 into bucket 0,
+    * which is the single-task window again. */
+  private[queries] def withCumSums(byV: DataFrame): (DataFrame, (Long, Long)) = {
     import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import org.apache.spark.sql.types._
+    val vType = byV.schema("v").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(vType),
+      s"withCumSums: v must be an integral column, got ${vType.simpleString}")
     val base = graft.util.QueryLeases.leased(
       byV.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val vb = base.withColumn("__b", shiftright(col("v").cast("long"), 16))

@@ -159,6 +159,73 @@ class McSuite extends SparkSpec {
     assert(math.abs(byEst("RegDI_X1") - 3.0) < 0.1)  // corrected
   }
 
+  test("topByKey keeps exactly the rows a stable sortBy(-key).take(m) keeps") {
+    val rng = new java.util.Random(11L)
+    val levels = Array(0.0, 0.25, 0.5)
+    for (trial <- 0 until 300; heavyTies <- Seq(false, true)) {
+      val n = 1 + rng.nextInt(if (trial % 20 == 0) 5000 else 60)
+      val keys = Array.fill(n)(
+        if (heavyTies) levels(rng.nextInt(3)) else rng.nextDouble())
+      val before = keys.clone()
+      for (m <- Seq(0, 1, n / 2, n).distinct) {
+        val want = keys.zipWithIndex.sortBy(-_._1).take(m).map(_._2).toSet
+        val got = LocalSim.topByKey(keys, m)
+        assert(got.indices.filter(got(_)).toSet === want,
+          s"n=$n m=$m ties=$heavyTies")
+      }
+      assert(keys.sameElements(before), "topByKey reordered its input")
+    }
+  }
+
+  test("replicate estimates are bit-pinned: draw order and arithmetic " +
+      "are part of the kernel's contract") {
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    assert(bits(LocalSim.run(SimConfig(1, 0.5, 42L, 2000, 100, 400))
+      .map(_.estimate)) === Seq(
+        0x4007ed3818b6ea73L, 0x400a2f804da801ccL, 0x4008485bcffd74f8L,
+        0x40098893dbfb0358L))
+    // γ = 200 zeroes about half the E–S keys, so n_B = 1500 is filled
+    // through ties at key 0.0 (ascending-index order)
+    assert(bits(LocalSim.run(SimConfig(2, 200.0, 43L, 2000, 100, 1500))
+      .map(_.estimate)) === Seq(
+        0x4008bcbd07331b37L, 0x400acde19f99bc2dL, 0x40088fcc7d99dbd1L,
+        0x4009f677619ac0f5L))
+    assert(bits(LocalSim.runSim1(1, 7L, 2000, 100, 200, 300)
+      .map(_.estimate)) === Seq(
+        0x400807c398740416L, 0x4009121b8fa18391L, 0x4008385ee695dbcdL,
+        0x4008385ee695dbcdL, 0x4008385ee695dbcbL, 0x40086371db06dfe8L,
+        0x4008f81ca654fcbfL, 0x4001142c7bfb6fdfL, 0x40087a58951ae1cdL,
+        0x40087bb0d8dbb95dL, 0x40087a6e2799583dL, 0x4008a314fb8db38eL,
+        0x40091ca94c3c8eefL))
+    assert(bits(LocalSim.runSim2(1, 7L, 4000, 200, 800)
+      .map(_.estimate)) === Seq(
+        0x401de9d90a25778fL, 0x401deb6cd7613b0dL, 0x401df490e9f49e04L,
+        0x401df490e9f49dfeL, 0x401e3506b2097dc0L, 0x401df5c31764be5fL,
+        0x401df33a386175f8L, 0x401df224c742464fL, 0x4022d88c4f678c5cL,
+        0x401e4c8a0a2de066L))
+    assert(bits(LocalSim.runSimV2(1, 0.5, 42L, 2000, 100, 400, Seq(0.5, 1.0))
+      .map(_.estimate)) === Seq(
+        0x40090480e82e7638L, 0x40096c5caae092b3L, 0x4008812cfd1f6b01L,
+        0x4008812cfd1f6b01L, 0x4008812cfd1f6b02L, 0x40088853f1b41974L,
+        0x4008ececd4510747L, 0x4008c058460ac430L, 0x4008c058460ac42eL,
+        0x4008c058460ac42eL))
+  }
+
+  test("an oversized draw fails on the driver and names the bad size") {
+    val tooBig = intercept[IllegalArgumentException](
+      MonteCarlo.nmarGrid(1, Seq(0.0), nPop = 100, nA = 10, nB = 101))
+    assert(tooBig.getMessage.contains("nB=101") &&
+      tooBig.getMessage.contains("nPop=100"), tooBig.getMessage)
+    val empty = intercept[IllegalArgumentException](
+      SimConfig(1, 0.0, 1L, nPop = 100, nA = 0, nB = 10))
+    assert(empty.getMessage.contains("nA=0"), empty.getMessage)
+    // runSim1's x<=2 stratum holds about half of 200 rows
+    val stratum = intercept[IllegalArgumentException](
+      LocalSim.runSim1(1, 7L, n = 200, nA = 10, nB1 = 150, nB2 = 10))
+    assert(stratum.getMessage.contains("n_B1") &&
+      stratum.getMessage.contains("cannot draw 150"), stratum.getMessage)
+  }
+
   test("local solver matches a hand-computed 2x2 system") {
     val x = LocalSim.solve(Array(Array(2.0, 1.0), Array(1.0, 3.0)),
       Array(5.0, 10.0))

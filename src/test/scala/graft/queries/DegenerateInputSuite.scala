@@ -35,6 +35,13 @@ class DegenerateInputSuite extends SparkSpec {
     }
   }
 
+  test("withCumSums rejects a fractional v (its buckets assume integers)") {
+    val byV = Seq((1.5, 2L, 1L), (3.25, 1L, 0L)).toDF("v", "t", "t1")
+    val e = intercept[IllegalArgumentException](StatsQueries.withCumSums(byV))
+    assert(e.getMessage.contains("v must be an integral column, got double"),
+      e.getMessage)
+  }
+
   test("m44/m45 still compute on a two-group fixture (guard does not " +
       "fire on healthy input)") {
     val mixed = docsDir("mixed",
